@@ -65,7 +65,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = GraftSession.defaultCores
     // Optional comma-separated exact-name filter (dev: reproduce one
     // query's per-sweep metrics without paying the full suite).
     val only = sys.env.get("SPARK_GRAFT_ONLY")
@@ -76,14 +76,7 @@ object Bench {
     // on a 32-cpu box and the old 1.5×cpus threshold waved it through —
     // wall times came out 1.6× the same-code quiet-box run.
     val loadPre = systemLoadAvg
-    val spark = GraftSession.envProfile(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    val spark = GraftSession.local("graft-bench", Some(cpus))
     spark.sparkContext.setLogLevel("WARN")
     val metrics = new MetricsListener
     spark.sparkContext.addSparkListener(metrics)
@@ -199,9 +192,9 @@ object Bench {
       // (r13 verdict #3's root cause): listener attribution can
       // under-credit one sweep (a neighbor's async task events
       // straggle across the settle window — q237's official r13 run
-      // recorded [63.3, 45.9, 63.3] KB on a plan ReproPlanFlip proves
-      // deterministic), and a min headline turns that single bad
-      // sample into the floor every later round is diffed against.
+      // recorded [63.3, 45.9, 63.3] KB on a plan proven deterministic,
+      // SURVEY §9 round-14 notes), and a min headline turns that single
+      // bad sample into the floor every later round is diffed against.
       // The median of 3+ sweeps ignores one straggler in either
       // direction; a REAL plan switch moves every sweep and moves the
       // median with it. Wall time keeps the min (contention robust —
@@ -251,7 +244,7 @@ object Bench {
     // detail landed in a file named r13 and a future reader would diff
     // the wrong pair — the stamp makes the artifact self-describing
     // regardless of the file it ends up in).
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","round":$currentRound,"queries":$qs,"calibrated_total_sec":$calTotal,"calibrated_queries":$calQs,$calLine,"query_metrics":$qm,"sf":"$sfDir","cpus":$cpus,$loadLine,"delta_vs_prev":${deltaVsPrev(headBytes, calQ, sfDir, cpus)}}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","round":$currentRound,"queries":$qs,"calibrated_total_sec":$calTotal,"calibrated_queries":$calQs,$calLine,"query_metrics":$qm,"sf":"$sfDir","cpus":$cpus,$loadLine,"delta_vs_prev":${deltaVsPrev(headBytes, calQ, sfDir, cpus.toString)}}"""
     println(line)
     // The driver's tail capture truncates stdout at 2000 chars (r06 lost
     // every per-query timing that way) — persist the full JSON as a

@@ -2,28 +2,39 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Session factory for the graft engine.
+/** Session factory for the graft engine: the one place a session is
+  * built, so every main, tool and spec runs under the same settings.
   *
-  * Local defaults target the test harness (`local[32]`, one JVM); the same
-  * settings are the ones that matter on a real cluster: AQE for runtime
-  * re-planning (skew joins, dynamic coalescing of shuffle partitions) and an
-  * explicit shuffle-partition count sized to the parallelism instead of the
-  * legacy default of 200.
+  * Local defaults target the test harness (one JVM); the same settings
+  * are the ones that matter on a real cluster: AQE for runtime
+  * re-planning (skew joins, dynamic coalescing of shuffle partitions) and
+  * an explicit shuffle-partition count sized to the parallelism instead of
+  * the legacy default of 200.
   */
 object GraftSession {
 
-  /** Build a local session. `cores` defaults to the driver-provided
-    * SPARK_GRAFT_CPUS so bench/verify runs match the harness sizing.
+  /** Local core count: SPARK_GRAFT_CPUS when set, so bench and verify
+    * runs match the harness sizing, else `min(nproc, 32)`.
     */
-  def local(appName: String = "graft",
-            cores: Option[Int] = None): SparkSession = {
-    val n = cores
-      .orElse(sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt))
+  def defaultCores: Int =
+    sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
       .getOrElse(math.min(Runtime.getRuntime.availableProcessors(), 32))
-    configure(
-      SparkSession.builder().master(s"local[$n]").appName(appName), n
-    ).getOrCreate()
+
+  /** A `local[n]` builder with [[configure]] and [[envProfile]] applied
+    * (`n` = `cores`, else [[defaultCores]]). Callers may layer static
+    * settings on the result before `getOrCreate()`.
+    */
+  def builder(appName: String = "graft",
+              cores: Option[Int] = None): SparkSession.Builder = {
+    val n = cores.getOrElse(defaultCores)
+    envProfile(configure(
+      SparkSession.builder().master(s"local[$n]").appName(appName), n))
   }
+
+  /** Build (or reuse) a local session from [[builder]]. */
+  def local(appName: String = "graft",
+            cores: Option[Int] = None): SparkSession =
+    builder(appName, cores).getOrCreate()
 
   /** Cluster-profile additions for the 100 TB deployment. Semantics are
     * identical to [[configure]]; these only size the runtime:

@@ -567,8 +567,8 @@ object Dedup {
     * (`doc_id`, `sh`, `sz`): prefix postings self-join, length filter,
     * and (when `positional`) the positional upper-bound prune. Exposed
     * separately so the candidate count — the quantity the filters exist
-    * to shrink — is directly measurable (ScaleProbe) without running
-    * verification.
+    * to shrink — is directly measurable without running verification
+    * (the SURVEY §9 candidate-count growth curves).
     */
   private[graft] def ppjoinCandidates(sets: DataFrame, num: Int, den: Int,
                                       positional: Boolean): DataFrame = {

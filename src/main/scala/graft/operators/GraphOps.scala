@@ -125,8 +125,8 @@ object GraphOps {
     * sweep). Cadence by measurement,
     * re-taken when the engine under it changed: the r10 A/B
     * (pre-clampStats) had eager-per-phase winning by 16-28%; the r12
-    * re-run WITH the checkpoint stats clamp (AbCheckpointCadence,
-    * sf0.1 near-dup pair graph, min-of-4) flipped it — the folded
+    * re-run WITH the checkpoint stats clamp (sf0.1 near-dup pair
+    * graph, min-of-4; SURVEY §9 round-12 A/B) flipped it — the folded
     * round is ~36% faster (1.18 s vs 1.84 s) because the large-star
     * blocks persist inside the round's witness job instead of paying
     * a job of their own, while the lazy checkpoint still gives both
@@ -145,8 +145,8 @@ object GraphOps {
     connectedComponentsWithStats(edges, srcCol, dstCol, maxIter)._1
 
   /** [[connectedComponents]] plus the number of large+small star
-    * rounds it ran — the convergence diagnostic ScaleProbe graphs
-    * (rounds vs diameter).
+    * rounds it ran — the convergence diagnostic behind SURVEY §9's
+    * rounds-vs-diameter curves.
     */
   def connectedComponentsWithStats(edges: DataFrame, srcCol: String,
                                    dstCol: String, maxIter: Int = 50)
@@ -478,8 +478,8 @@ object GraphOps {
     // Cadence by measurement, re-taken whenever the engine under it
     // changes: the r10 A/B (pre-clampStats) had eager-per-round winning
     // by 15-30%; the r12 re-run WITH `GraftColumns.clampStats` in place
-    // (AbCheckpointCadence, sf0.1/local[32], min-of-8 across two
-    // sessions) flipped it — one LAZY checkpoint per round, the whole
+    // (sf0.1/local[32], min-of-8 across two sessions; SURVEY §9
+    // round-12 A/B) flipped it — one LAZY checkpoint per round, the whole
     // chain materialized by a single job, is ~12% faster (2.87 s vs
     // 3.28 s): lineage stays truncated per round (clamped stats, small
     // codegen units) but the per-round job-submission latency is paid
@@ -927,7 +927,7 @@ object GraphOps {
     * Output: (node, core_degree) — survivors with their degree inside
     * the k-core (≥ k by construction). Multi-edges count once (the
     * input is distinct-ed); self-loops are dropped.
-    * Returns (result, rounds) — rounds is the ScaleProbe diagnostic.
+    * Returns (result, rounds) — rounds is the convergence diagnostic.
     *
     * RELEASE CONTRACT: result == handle (the [[connectedComponents]]
     * convention; the result aggregates over the surviving-edge

@@ -1,8 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.{GraftCodegenAudit, SparkSession}
+import org.apache.spark.sql.GraftCodegenAudit
 
-import graft.SparkEntry
+import graft.{GraftSession, SparkEntry}
 
 /** Suite-wide JIT-compilability audit (r13 verdict #1): run every
   * [[SparkEntry.queries]] entry, then re-emit + re-compile each fused
@@ -43,18 +43,12 @@ object CodegenAudit {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
                                   "/root/testdata/sf0.1")
     val outFile = args.headOption.getOrElse("JITAUDIT.json")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
+    val cpus = GraftSession.defaultCores
+    val spark = GraftSession.builder("graft-codegen-audit", Some(cpus))
       // the compile cache is the audit's witness for intermediate-job
       // classes; the default 100-entry cap can evict a heavy query's
       // OWN classes between the two snapshots (q269 alone compiles 98)
       .config("spark.sql.codegen.cache.maxEntries", "100000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val qid = "q(\\d+)".r

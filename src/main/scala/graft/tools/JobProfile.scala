@@ -3,7 +3,6 @@ package graft.tools
 import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 import graft.{GraftSession, SparkEntry}
 
@@ -18,15 +17,7 @@ import graft.{GraftSession, SparkEntry}
 object JobProfile {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, name) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.envProfile(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    val spark = GraftSession.local("graft-jobprofile")
     spark.sparkContext.setLogLevel("ERROR")
     val starts = new ConcurrentHashMap[Int, (String, Long)]()
     val totals = new ConcurrentHashMap[String, (Long, Long)]() // ns, jobs

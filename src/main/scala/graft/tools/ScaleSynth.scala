@@ -10,16 +10,15 @@ import org.apache.spark.sql.functions._
   * ever been validated at sf0.01/sf0.1; the brief's question is 100×
   * behavior"). sf0.1 × 10 ≈ the sf1.0 the environment lacks.
   *
-  * Inflation discipline = [[graft.ScaleProbe]]'s, applied to every
-  * table with FOREIGN KEYS KEPT CONSISTENT: the whole database
-  * universe is replicated `mult` times, every key column remapped
-  * `k·mult + copy`, so copy c of every table joins exactly copy c of
-  * every other — join fan-outs and cardinality ratios are preserved,
-  * sizes scale by `mult`. `documents.text` keeps copy 0 verbatim and
-  * appends a per-copy perturbation token to later copies (near-dup
-  * families of size `mult` — the STRESS regime for the dedup family:
-  * every 25-gram of every document is corpus-duplicated, so
-  * exact-substring operators see worst-case coverage; growth numbers
+  * Inflation discipline, FOREIGN KEYS KEPT CONSISTENT: the whole
+  * database universe is replicated `mult` times, every key column
+  * remapped `k·mult + copy`, so copy c of every table joins exactly
+  * copy c of every other — join fan-outs and cardinality ratios are
+  * preserved, sizes scale by `mult`. `documents.text` keeps copy 0
+  * verbatim and appends a per-copy perturbation token to later copies
+  * (near-dup families of size `mult` — the STRESS regime for the
+  * dedup family: every 25-gram of every document is corpus-duplicated,
+  * so exact-substring operators see worst-case coverage; growth numbers
   * there are upper bounds, stated as such in SURVEY §9).
   *
   *   runMain graft.tools.ScaleSynth <mult> <outDir> [srcDir]
