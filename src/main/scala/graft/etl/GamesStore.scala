@@ -133,10 +133,6 @@ final class GamesStore(root: String) extends Serializable {
       .write.mode("append").parquet(ledgerPath)
   }
 
-  def appendLedger(spark: SparkSession, username: String, archiveUrl: String,
-                   gameCount: Long): Unit =
-    appendLedgerRows(spark, Seq((username, archiveUrl, gameCount)))
-
   /** K3: best-effort status append, batched like the ledger (errors
     * swallowed, like the reference — a failed log line must never fail the
     * run). Row shape: (stage, message, httpStatus).

@@ -1,14 +1,18 @@
 package graft.semantic
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** The 11-measure chess semantic layer (SURVEY.md §2.6 A1–A11).
   *
   * Measure names attested in the reference's report layout; bodies inferred
   * from name + schema (the model blob is compressed — SURVEY.md §0 note).
-  * Operates on the derived fact (GameTransforms.withDerived): requires
-  * `result`, `user_color`, and the derived dimension columns.
+  * Every measure is built from four ADDITIVE counters — games (A1/A8/A9),
+  * wins (A2/A10), losses (A3), draws (A4) — kept per grain by [[counters]];
+  * the rates (A5/A6/A7, A11's rolling rate) are derived from them at read
+  * time in the [[Dashboard]] companion, never summed (a rate is not
+  * additive). Operates on the derived fact (GameTransforms.withDerived):
+  * requires `result`, `user_color`, and the derived dimension columns.
   */
 object ChessMeasures {
 
@@ -43,32 +47,16 @@ object ChessMeasures {
       .otherwise("unknown")
   }
 
-  private def o: Column = outcome(col("result"), col("user_color"))
-
-  def winExpr: Column  = (o === "win").cast("long")
-  def lossExpr: Column = (o === "loss").cast("long")
-  def drawExpr: Column = (o === "draw").cast("long")
-
-  // --------------------------------------------------- the 11 measures
-
-  /** A1 `TotalGames` */
-  val totalGames: Measure = Measure("total_games", count(lit(1)))
-  /** A2 `Total Wins` */
-  val totalWins: Measure = Measure("total_wins", sum(winExpr))
-  /** A3 `Total Losses` */
-  val totalLosses: Measure = Measure("total_losses", sum(lossExpr))
-  /** A4 `Total Draws` */
-  val totalDraws: Measure = Measure("total_draws", sum(drawExpr))
-  /** A5/A6 `Win%` / `WinRate` — null-safe divide; evaluates correctly in
-    * any group context because it's a pure aggregate expression.
+  /** The counters `games`/`wins`/`losses`/`draws` at `dims` grain over a
+    * derived fact (no dims → one global row). Batch visuals read them
+    * straight off the filtered fact; the streaming dashboard keeps them
+    * per micro-batch and sums them into its state.
     */
-  val winRate: Measure = Measure("win_rate",
-    sum(winExpr).cast("double") / nullif(count(lit(1)), lit(0)))
-  /** A8/A9 `Games_Count` / `Games_vs_Opponent` (same body, group differs) */
-  val gamesCount: Measure = Measure("games_count", count(lit(1)))
-  /** A10 `Wins_vs_Opponent` */
-  val winsVsOpponent: Measure = Measure("wins", sum(winExpr))
-
-  val all: Seq[Measure] =
-    Seq(totalGames, totalWins, totalLosses, totalDraws, winRate)
+  def counters(derived: DataFrame, dims: Seq[String]): DataFrame = {
+    val o = outcome(col("result"), col("user_color"))
+    def tally(v: String): Column = sum((o === v).cast("long"))
+    derived.groupBy(dims.map(col): _*).agg(count(lit(1)).as("games"),
+      tally("win").as("wins"), tally("loss").as("losses"),
+      tally("draw").as("draws"))
+  }
 }

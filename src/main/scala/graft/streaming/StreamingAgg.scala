@@ -56,20 +56,29 @@ object StreamingAgg {
     }
   }
 
+  /** The state-write policy every merge-style stream state shares: merge
+    * `part` into the latest committed version STRICTLY below `batchId`
+    * (`merge(prev, part)`; `part` alone when there is none) and overwrite
+    * `batch=<batchId>` with the result.
+    */
+  def commitVersion(part: DataFrame, batchId: Long, root: String)
+                   (merge: (DataFrame, DataFrame) => DataFrame): Unit = {
+    val merged = latestState(part.sparkSession, root,
+                             beforeBatchId = batchId) match {
+      case Some((_, prev)) => merge(prev, part)
+      case None            => part
+    }
+    merged.write.mode("overwrite").parquet(s"$root/batch=$batchId")
+  }
+
   /** Merge one micro-batch's PARTIAL aggregate rows (already aggregated
     * by `keyCol`, mergeable-prefix columns — see
     * [[IncrementalAgg.mergeStates]]) into the state at `root`.
     */
   def mergeBatch(partials: DataFrame, batchId: Long, keyCol: String,
-                 root: String): Unit = {
-    val spark = partials.sparkSession
-    val merged = latestState(spark, root, beforeBatchId = batchId) match {
-      case Some((_, prev)) => IncrementalAgg.mergeStates(keyCol, prev,
-                                                         partials)
-      case None => partials
-    }
-    merged.write.mode("overwrite").parquet(s"$root/batch=$batchId")
-  }
+                 root: String): Unit =
+    commitVersion(partials, batchId, root)(
+      IncrementalAgg.mergeStates(keyCol, _, _))
 
   /** Wire a stream: `aggregate` turns each raw micro-batch into partial
     * per-key aggregates; the merge maintains the state table at `root`.

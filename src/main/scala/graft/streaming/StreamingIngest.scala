@@ -17,7 +17,7 @@ import graft.etl.{GameTransforms, GamesStore, Schemas}
   * | daily cron trigger               | `Trigger.AvailableNow` per run    |
   * | `state.json` watermark/ledger    | streaming checkpoint dir          |
   * | re-fetch current month           | file source picks up new files    |
-  * | dedup by game_url on append      | `dropDuplicates` + anti-join sink |
+  * | dedup by game_url on append      | anti-join sink (`appendGames`)    |
   * | append may fail → retried run    | `foreachBatch` replays batch id   |
   *
   * At-least-once file delivery + the idempotent anti-join append =
@@ -31,12 +31,11 @@ object StreamingIngest {
     * explicit — required for streaming sources and identical to the batch
     * reader's (`ArchiveSource.readLanding`).
     */
-  def readLandingStream(spark: SparkSession, landingDir: String,
-                        maxFilesPerTrigger: Int = 16): DataFrame =
+  def readLandingStream(spark: SparkSession, landingDir: String): DataFrame =
     spark.readStream
       .schema(Schemas.archiveType)
       .option("multiLine", "true")
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
+      .option("maxFilesPerTrigger", 16)
       .json(landingDir)
       .withColumn("archive_url", input_file_name())
       .select(col("archive_url"), explode_outer(col("games")).as("game"))
@@ -49,26 +48,16 @@ object StreamingIngest {
     * backfilled months-old archive would arrive below the watermark and be
     * dropped as "late" (silent data loss; the reference happily ingests
     * old months), and without the event-time column in the dedup key the
-    * state store would never evict, growing O(all history). Optional
-    * `streamDedup` enables `dropDuplicatesWithinWatermark(game_url)` as a
-    * state-bounded optimization for deployments where duplicates only
-    * arrive close together in time — the sink anti-join still backstops
-    * exactness either way.
+    * state store would never evict, growing O(all history).
     */
   def ingestStream(spark: SparkSession, landingDir: String, store: GamesStore,
-                   username: String, checkpointDir: String,
-                   watermarkDelay: String = "30 days",
-                   streamDedup: Boolean = false): DataStreamWriter[Row] = {
-    val projected = GameTransforms.projectFact(
+                   username: String, checkpointDir: String)
+      : DataStreamWriter[Row] =
+    GameTransforms.projectFact(
       readLandingStream(spark, landingDir)
         .filter(col("game").isNotNull)
         .withColumn("username", lit(username)))
-    val fact =
-      if (streamDedup)
-        projected.withWatermark("end_time_utc", watermarkDelay)
-          .dropDuplicatesWithinWatermark("game_url")
-      else projected
-    fact.writeStream
+      .writeStream
       .option("checkpointLocation", checkpointDir)
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -78,7 +67,6 @@ object StreamingIngest {
         store.appendGames(batch.sparkSession, batch)
         (): Unit
       }
-  }
 
   /** Run one incremental pass over whatever has landed (the streaming
     * analog of the reference's daily cron run) and block until done.

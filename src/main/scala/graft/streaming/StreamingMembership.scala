@@ -16,7 +16,7 @@ import graft.operators.{Bloom, Kmv}
   * counters), so an unbounded stream is summarized forever in bounded
   * state.
   *
-  * Versioning/exactly-once is [[StreamingAgg]]'s discipline verbatim:
+  * Versioning/exactly-once is [[StreamingAgg.commitVersion]]'s discipline:
   * the merged state is written whole to `batch=<id>`, the merge reads
   * the latest committed version STRICTLY below the current id, and a
   * crash-replayed batch overwrites its own version with identical
@@ -30,16 +30,11 @@ object StreamingMembership {
 
   /** Merge one micro-batch's keys into the Bloom filter at `root`. */
   def mergeBloomBatch(batch: DataFrame, batchId: Long, keyCol: String,
-                      mBits: Int, k: Int, root: String): Unit = {
-    val part = Bloom.build(batch, keyCol, mBits, k)
-    val merged =
-      StreamingAgg.latestState(batch.sparkSession, root,
-                               beforeBatchId = batchId) match {
-        case Some((_, prev)) => Bloom.merge(prev.unionByName(part))
-        case None => part
-      }
-    merged.write.mode("overwrite").parquet(s"$root/batch=$batchId")
-  }
+                      mBits: Int, k: Int, root: String): Unit =
+    StreamingAgg.commitVersion(
+        Bloom.build(batch, keyCol, mBits, k), batchId, root) {
+      (prev, part) => Bloom.merge(prev.unionByName(part))
+    }
 
   /** Wire a key stream into a maintained Bloom filter. */
   def maintainBloom(stream: DataFrame, keyCol: String, mBits: Int,
@@ -65,16 +60,10 @@ object StreamingMembership {
 
   /** Merge one micro-batch's keys into the KMV sketch at `root`. */
   def mergeKmvBatch(batch: DataFrame, batchId: Long, keyCol: String,
-                    k: Int, root: String): Unit = {
-    val part = Kmv.sketch(batch, keyCol, k)
-    val merged =
-      StreamingAgg.latestState(batch.sparkSession, root,
-                               beforeBatchId = batchId) match {
-        case Some((_, prev)) => Kmv.merge(prev.unionByName(part), k)
-        case None => part
-      }
-    merged.write.mode("overwrite").parquet(s"$root/batch=$batchId")
-  }
+                    k: Int, root: String): Unit =
+    StreamingAgg.commitVersion(Kmv.sketch(batch, keyCol, k), batchId, root) {
+      (prev, part) => Kmv.merge(prev.unionByName(part), k)
+    }
 
   /** Wire a key stream into a maintained KMV sketch. */
   def maintainKmv(stream: DataFrame, keyCol: String, k: Int,

@@ -16,7 +16,7 @@ import graft.operators.CountMin
   * cost a bounded probe forever (contrast the exact per-key state of
   * [[StreamingAgg]], which grows with the key universe).
   *
-  * Versioning/exactly-once is [[StreamingAgg]]'s discipline verbatim:
+  * Versioning/exactly-once is [[StreamingAgg.commitVersion]]'s discipline:
   * full merged state written to `batch=<id>`, merge reads the latest
   * committed version STRICTLY below the current id, so crash replay
   * overwrites its own version with identical content.
@@ -25,16 +25,11 @@ object StreamingSketch {
 
   /** Merge one micro-batch's rows into the sketch state at `root`. */
   def mergeBatch(batch: DataFrame, batchId: Long, keyCol: String,
-                 depth: Int, width: Int, root: String): Unit = {
-    val part = CountMin.sketch(batch, keyCol, depth, width)
-    val merged =
-      StreamingAgg.latestState(batch.sparkSession, root,
-                               beforeBatchId = batchId) match {
-        case Some((_, prev)) => CountMin.merge(prev.unionByName(part))
-        case None => part
-      }
-    merged.write.mode("overwrite").parquet(s"$root/batch=$batchId")
-  }
+                 depth: Int, width: Int, root: String): Unit =
+    StreamingAgg.commitVersion(
+        CountMin.sketch(batch, keyCol, depth, width), batchId, root) {
+      (prev, part) => CountMin.merge(prev.unionByName(part))
+    }
 
   /** Wire a stream of rows carrying `keyCol` into a maintained sketch. */
   def maintain(stream: DataFrame, keyCol: String, depth: Int, width: Int,

@@ -75,6 +75,28 @@ class DashboardSpec extends SparkSpec {
     assert(rows(1).getAs[String]("opponent_username") == "carol")
   }
 
+  test("F7: the Top-N rank is taken under the slicer") {
+    // unfiltered, bob leads with 4 games; on 07-02 only carol played
+    val ctx = FilterContext.empty
+      .dateBetween(col("date_ymd"), "2025-07-02", "2025-07-02")
+    val rows = dash.topOpponents(1, ctx).collect()
+    assert(rows.map(r => (r.getAs[String]("opponent_username"),
+                          r.getAs[Long]("games_count"),
+                          r.getAs[Long]("wins"))).toSeq ==
+      Seq(("carol", 2L, 0L)))
+  }
+
+  test("v10: win rate by opponent rating band, ordered by rate") {
+    val rows = dash.winRateByOpponentBucket().collect()
+      .map(r => (r.getAs[String]("opponent_rating_bucket"),
+                 r.getAs[Long]("games_count"), r.getAs[Long]("total_wins"),
+                 r.getAs[Double]("win_rate")))
+    assert(rows.toSeq == Seq(
+      ("1400-1599", 4L, 3L, 0.75), // bob: g1, g2, g5 wins; g6 loss
+      ("1600-1799", 2L, 0L, 0.0),  // carol: g3 loss, g4 draw
+      ("2000-2199", 2L, 0L, 0.0))) // dave: g7 draw, g8 unknown
+  }
+
   test("A6: win rate by bucket x color matrix") {
     val m = dash.winRateByBucketAndColor().collect()
       .map(r => (r.getAs[String]("time_control_bucket"),
@@ -95,11 +117,9 @@ class DashboardSpec extends SparkSpec {
     assert(byDate("2025-07-05").getAs[Double]("rolling_win_rate") == 1.0)
     // window [07-01..07-03]: g1,g2 win; g3 loss; g4 draw → 2/4
     assert(byDate("2025-07-03").getAs[Double]("rolling_win_rate") == 0.5)
-    // empty window → null rate, not division blow-up
-    assert(byDate("2025-07-04").isNullAt(
-      byDate("2025-07-04").fieldIndex("rolling_win_rate")) == false ||
-      byDate("2025-07-04").getAs[Long]("window_games") > 0 ||
-      byDate("2025-07-04").isNullAt(byDate("2025-07-04").fieldIndex("rolling_win_rate")))
+    // window [07-02..07-04] on a game-less day: g3 loss, g4 draw → 0/2
+    assert(byDate("2025-07-04").getAs[Long]("window_games") == 2)
+    assert(byDate("2025-07-04").getAs[Double]("rolling_win_rate") == 0.0)
   }
 
   test("A11: fully empty window yields null, not error") {
